@@ -329,7 +329,7 @@ object SparkEntry {
       // localCheckpoint: the orderBy's range-partitioner SAMPLES its child,
       // which would re-run the whole remote exchange a second time; pin the
       // augmented frame first so the wire work happens exactly once.
-      graft.remote.RemoteUdf.withRemoteColumn(df, "127.0.0.1", port, "gcd",
+      graft.remote.RemoteUdf.withRemoteColumn(df, Seq(("127.0.0.1", port)), "gcd",
           Seq("a", "b"), org.apache.spark.sql.types.IntegerType)
         .selectExpr("l_orderkey", "l_linenumber", "value AS g")
         .localCheckpoint()
@@ -345,8 +345,9 @@ object SparkEntry {
     "q_remote_dict" -> dfq { s =>
       val port = graft.remote.RemoteFixture.port
       val df = s.table("documents").selectExpr("doc_id", "text")
-      graft.remote.RemoteUdf.withRemoteColumnDict(df, Seq(("127.0.0.1", port)),
-          "graft_length", Seq("text"), org.apache.spark.sql.types.IntegerType)
+      graft.remote.RemoteUdf.withRemoteColumn(df, Seq(("127.0.0.1", port)),
+          "graft_length", Seq("text"), org.apache.spark.sql.types.IntegerType,
+          dictEncodeStrings = true)
         .selectExpr("doc_id", "value AS n")
         .localCheckpoint()
         .orderBy("doc_id")
@@ -360,8 +361,8 @@ object SparkEntry {
       val df = s.table("lineitem")
         .selectExpr("l_orderkey", "l_linenumber",
           "map('rf', l_returnflag, 'ls', l_linestatus) AS m")
-      graft.remote.RemoteUdf.withRemoteColumn(df, "127.0.0.1", port, "graft_identity",
-          Seq("m"), org.apache.spark.sql.types.MapType(
+      graft.remote.RemoteUdf.withRemoteColumn(df, Seq(("127.0.0.1", port)),
+          "graft_identity", Seq("m"), org.apache.spark.sql.types.MapType(
             org.apache.spark.sql.types.StringType, org.apache.spark.sql.types.StringType))
         .selectExpr("l_orderkey", "l_linenumber", "graft_to_json(value) AS mj")
         .localCheckpoint() // exchange runs once; sort sampling reads the checkpoint
@@ -388,8 +389,9 @@ object SparkEntry {
     // each document explodes into its whitespace tokens inside the guest.
     "q_python_split" -> dfq { s =>
       val df = s.table("documents").selectExpr("doc_id", "text")
-      graft.remote.RemoteUdf.withRemoteTableColumn(df, graft.remote.PythonWorker.endpoints,
-          "py_split", Seq("text"), org.apache.spark.sql.types.StringType)
+      graft.remote.RemoteUdf.withRemoteColumn(df, graft.remote.PythonWorker.endpoints,
+          "py_split", Seq("text"), org.apache.spark.sql.types.StringType,
+          graft.remote.ResultMode.Table)
         .selectExpr("doc_id", "value AS tok")
         .localCheckpoint() // exchange runs once; sort sampling reads the checkpoint
         .orderBy("doc_id", "tok")
@@ -444,9 +446,9 @@ object SparkEntry {
     // them through and the backend decodes + resolves the string overload.
     "q_flight_dict_srv" -> dfq { s =>
       val df = s.table("documents").selectExpr("doc_id", "text")
-      graft.remote.flight.FlightUdf.withFlightColumnDict(df,
+      graft.remote.flight.FlightUdf.withFlightColumn(df,
           Seq(("127.0.0.1", graft.remote.flight.FlightFixture.port)), "graft_length",
-          Seq("text"), org.apache.spark.sql.types.IntegerType)
+          Seq("text"), org.apache.spark.sql.types.IntegerType, dictEncodeStrings = true)
         .selectExpr("doc_id", "value AS n")
         .localCheckpoint()
         .orderBy("doc_id")
@@ -471,9 +473,9 @@ object SparkEntry {
     // DoExchange (reference `call_table_function`, `remote/mod.rs:121-132`).
     "q_flight_split" -> dfq { s =>
       val df = s.table("documents").selectExpr("doc_id", "text")
-      graft.remote.flight.FlightUdf.withFlightTableColumn(df,
+      graft.remote.flight.FlightUdf.withFlightColumn(df,
           graft.remote.flight.FlightWorker.endpoints, "flight_words",
-          Seq("text"), org.apache.spark.sql.types.StringType)
+          Seq("text"), org.apache.spark.sql.types.StringType, graft.remote.ResultMode.Table)
         .selectExpr("doc_id", "value AS tok")
         .localCheckpoint()
         .orderBy("doc_id", "tok")
@@ -487,8 +489,9 @@ object SparkEntry {
       val port = graft.remote.flight.FlightFixture.port
       val df = s.table("lineitem").selectExpr("l_orderkey", "l_linenumber",
         "CAST(l_partkey AS INT) AS a", "CAST(l_suppkey % 7 AS INT) AS b")
-      graft.remote.flight.FlightUdf.withFlightFallibleColumn(df, Seq(("127.0.0.1", port)),
-          "graft_div", Seq("a", "b"), org.apache.spark.sql.types.IntegerType)
+      graft.remote.flight.FlightUdf.withFlightColumn(df, Seq(("127.0.0.1", port)),
+          "graft_div", Seq("a", "b"), org.apache.spark.sql.types.IntegerType,
+          graft.remote.ResultMode.ValueError)
         .selectExpr("l_orderkey", "l_linenumber", "value AS div_value", "error AS div_error")
         .localCheckpoint()
         .orderBy("l_orderkey", "l_linenumber")
@@ -505,8 +508,8 @@ object SparkEntry {
       val port = graft.remote.flight.FlightFixture.port
       val df = s.table("lineitem").selectExpr("l_orderkey", "l_linenumber",
         "CAST(l_partkey AS INT) AS a", "CAST(l_suppkey AS INT) AS b")
-      graft.remote.flight.FlightUdf.withFlightColumnStreamed(df, Seq(("127.0.0.1", port)),
-          "gcd", Seq("a", "b"), org.apache.spark.sql.types.IntegerType)
+      graft.remote.flight.FlightUdf.withFlightColumn(df, Seq(("127.0.0.1", port)),
+          "gcd", Seq("a", "b"), org.apache.spark.sql.types.IntegerType, streamed = true)
         .selectExpr("l_orderkey", "l_linenumber", "value AS g")
         .localCheckpoint()
         .orderBy("l_orderkey", "l_linenumber")
@@ -520,9 +523,9 @@ object SparkEntry {
       val port = graft.remote.flight.FlightFixture.port
       val df = s.table("lineitem").selectExpr("l_orderkey", "l_linenumber",
         "CAST(l_partkey AS INT) AS a", "CAST(l_suppkey % 7 AS INT) AS b")
-      graft.remote.flight.FlightUdf.withFlightFallibleColumnStreamed(df,
-          Seq(("127.0.0.1", port)),
-          "graft_div", Seq("a", "b"), org.apache.spark.sql.types.IntegerType)
+      graft.remote.flight.FlightUdf.withFlightColumn(df, Seq(("127.0.0.1", port)),
+          "graft_div", Seq("a", "b"), org.apache.spark.sql.types.IntegerType,
+          graft.remote.ResultMode.ValueError, streamed = true)
         .selectExpr("l_orderkey", "l_linenumber", "value AS div_value", "error AS div_error")
         .localCheckpoint()
         .orderBy("l_orderkey", "l_linenumber")
@@ -534,8 +537,9 @@ object SparkEntry {
       val port = graft.remote.flight.FlightFixture.port
       val df = s.table("lineitem").selectExpr("l_orderkey", "l_linenumber",
         "CAST(l_linenumber AS INT) AS n")
-      graft.remote.flight.FlightUdf.withFlightTableColumn(df, Seq(("127.0.0.1", port)),
-          "range_setof", Seq("n"), org.apache.spark.sql.types.IntegerType)
+      graft.remote.flight.FlightUdf.withFlightColumn(df, Seq(("127.0.0.1", port)),
+          "range_setof", Seq("n"), org.apache.spark.sql.types.IntegerType,
+          graft.remote.ResultMode.Table)
         .selectExpr("l_orderkey", "l_linenumber", "value")
         .localCheckpoint()
         .orderBy("l_orderkey", "l_linenumber", "value")
@@ -587,8 +591,9 @@ object SparkEntry {
     // its whitespace tokens inside V8.
     "q_js_split" -> dfq { s =>
       val df = s.table("documents").selectExpr("doc_id", "text")
-      graft.remote.JsUdf.withJsTableColumn(df, graft.remote.JsWorker.endpoints,
-          "js_split", Seq("text"), org.apache.spark.sql.types.StringType)
+      graft.remote.JsUdf.withJsColumn(df, graft.remote.JsWorker.endpoints,
+          "js_split", Seq("text"), org.apache.spark.sql.types.StringType,
+          graft.remote.ResultMode.Table)
         .selectExpr("doc_id", "value AS tok")
         .localCheckpoint()
         .orderBy("doc_id", "tok")
@@ -617,8 +622,9 @@ object SparkEntry {
       val port = graft.remote.RemoteFixture.port
       val df = s.table("lineitem").selectExpr("l_orderkey", "l_linenumber",
         "CAST(l_partkey AS INT) AS a", "CAST(l_suppkey % 7 AS INT) AS b")
-      graft.remote.RemoteUdf.withRemoteFallibleColumn(df, Seq(("127.0.0.1", port)),
-          "graft_div", Seq("a", "b"), org.apache.spark.sql.types.IntegerType)
+      graft.remote.RemoteUdf.withRemoteColumn(df, Seq(("127.0.0.1", port)),
+          "graft_div", Seq("a", "b"), org.apache.spark.sql.types.IntegerType,
+          graft.remote.ResultMode.ValueError)
         .selectExpr("l_orderkey", "l_linenumber", "value AS div_value", "error AS div_error")
         .localCheckpoint() // exchange runs once; sort sampling reads the checkpoint
         .orderBy("l_orderkey", "l_linenumber")
@@ -629,9 +635,9 @@ object SparkEntry {
     "q_python_div_error" -> dfq { s =>
       val df = s.table("lineitem").selectExpr("l_orderkey", "l_linenumber",
         "CAST(l_partkey AS INT) AS a", "CAST(l_suppkey % 7 AS INT) AS b")
-      graft.remote.RemoteUdf.withRemoteFallibleColumn(df,
+      graft.remote.RemoteUdf.withRemoteColumn(df,
           graft.remote.PythonWorker.endpoints, "py_div", Seq("a", "b"),
-          org.apache.spark.sql.types.IntegerType)
+          org.apache.spark.sql.types.IntegerType, graft.remote.ResultMode.ValueError)
         .selectExpr("l_orderkey", "l_linenumber", "value AS div_value", "error AS div_error")
         .localCheckpoint()
         .orderBy("l_orderkey", "l_linenumber")
@@ -641,8 +647,9 @@ object SparkEntry {
     "q_js_div_error" -> dfq { s =>
       val df = s.table("lineitem").selectExpr("l_orderkey", "l_linenumber",
         "CAST(l_partkey AS INT) AS a", "CAST(l_suppkey % 7 AS INT) AS b")
-      graft.remote.JsUdf.withJsFallibleColumn(df, graft.remote.JsWorker.endpoints,
-          "js_div", Seq("a", "b"), org.apache.spark.sql.types.IntegerType)
+      graft.remote.JsUdf.withJsColumn(df, graft.remote.JsWorker.endpoints,
+          "js_div", Seq("a", "b"), org.apache.spark.sql.types.IntegerType,
+          graft.remote.ResultMode.ValueError)
         .selectExpr("l_orderkey", "l_linenumber", "value AS div_value", "error AS div_error")
         .localCheckpoint()
         .orderBy("l_orderkey", "l_linenumber")
@@ -654,8 +661,8 @@ object SparkEntry {
       val port = graft.remote.RemoteFixture.port
       val df = s.table("lineitem").selectExpr("l_orderkey", "l_linenumber",
         "CAST(l_extendedprice AS DECIMAL(18,2)) AS d")
-      graft.remote.RemoteUdf.withRemoteColumn(df, "127.0.0.1", port, "graft_identity",
-          Seq("d"), org.apache.spark.sql.types.DecimalType(18, 2))
+      graft.remote.RemoteUdf.withRemoteColumn(df, Seq(("127.0.0.1", port)),
+          "graft_identity", Seq("d"), org.apache.spark.sql.types.DecimalType(18, 2))
         .selectExpr("l_orderkey", "l_linenumber", "CAST(value AS STRING) AS dstr")
         .localCheckpoint() // exchange runs once; sort sampling reads the checkpoint
         .orderBy("l_orderkey", "l_linenumber")

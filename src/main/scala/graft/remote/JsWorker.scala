@@ -273,103 +273,34 @@ case class JsAggTransport(endpoints: Seq[(String, Int)], resultType: DataType)
 }
 
 /** Spark-side integration: evaluate a JS guest function per partition —
-  * the [[RemoteUdf]] shape (fan-out, pooled per-partition connections,
-  * bounded chunks) over the JSON framing. */
+  * the [[RemoteUdf]] shape ([[PartitionDriver]]: fan-out, one connection per
+  * partition, bounded chunks) over the JSON framing. */
 object JsUdf {
-  private def fanOut(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= target) df else df.repartition(target)
-  }
-
+  /** Append the JS guest function's result to `df`; `mode` picks the
+    * output shape. */
   def withJsColumn(df: org.apache.spark.sql.DataFrame, endpoints: Seq[(String, Int)],
-                   fname: String, argCols: Seq[String],
-                   retType: DataType): org.apache.spark.sql.DataFrame = {
-    val argIdx = argCols.map(df.schema.fieldIndex)
-    val outSchema = StructType(df.schema.fields :+ StructField("value", retType))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    val eps = endpoints.toIndexedSeq
-    fanOut(df).mapPartitions { it =>
-      if (it.isEmpty) Iterator.empty
-      else {
-        val pid = Option(org.apache.spark.TaskContext.get()).map(_.partitionId()).getOrElse(0)
-        val (host, port) = eps(pid % eps.size)
-        val client = new JsUdfClient(host, port)
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => client.close()))
-        it.grouped(RemoteProtocol.BatchSize).flatMap { chunk =>
-          val rows = chunk.map(r => argIdx.map(r.get))
-          val vals = client.call(fname, retType, rows)
-          chunk.zip(vals).map { case (r, v) =>
-            org.apache.spark.sql.Row.fromSeq(r.toSeq :+ v)
-          }
-        }
+                   fname: String, argCols: Seq[String], retType: DataType,
+                   mode: ResultMode = ResultMode.Value): org.apache.spark.sql.DataFrame =
+    PartitionDriver.withColumn(df, endpoints, argCols, retType, mode,
+        RemoteProtocol.BatchSize) { (host, port, _) =>
+      val client = new JsUdfClient(host, port)
+      new PartitionDriver.Conn {
+        def call(rows: Seq[Seq[Any]]) = client.call(fname, retType, rows)
+        def callWithErrors(rows: Seq[Seq[Any]]) = client.callWithErrors(fname, retType, rows)
+        def callTable(rows: Seq[Seq[Any]]) = client.callTable(fname, retType, rows)
+        def release(dead: Boolean): Unit = client.close()
       }
-    }(enc)
-  }
+    }
 
   /** Define a JS guest function from source on EVERY endpoint of the pool
     * (each V8 process owns its own registry) — driver-side, once, before
-    * the mapPartitions exchange runs. */
+    * the column call runs. */
   def defineJs(endpoints: Seq[(String, Int)], kind: String, sig: String,
                code: String): Unit =
     endpoints.foreach { case (h, p) =>
       val c = new JsUdfClient(h, p)
       try c.define(kind, sig, code) finally c.close()
     }
-
-  /** Append `value` AND `error` columns from the JS guest — the fallible
-    * call surface ([[RemoteUdf.withRemoteFallibleColumn]] over JSON framing). */
-  def withJsFallibleColumn(df: org.apache.spark.sql.DataFrame, endpoints: Seq[(String, Int)],
-                           fname: String, argCols: Seq[String],
-                           retType: DataType): org.apache.spark.sql.DataFrame = {
-    val argIdx = argCols.map(df.schema.fieldIndex)
-    val outSchema = StructType(df.schema.fields :+
-      StructField("value", retType) :+ StructField("error", StringType))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    val eps = endpoints.toIndexedSeq
-    fanOut(df).mapPartitions { it =>
-      if (it.isEmpty) Iterator.empty
-      else {
-        val pid = Option(org.apache.spark.TaskContext.get()).map(_.partitionId()).getOrElse(0)
-        val (host, port) = eps(pid % eps.size)
-        val client = new JsUdfClient(host, port)
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => client.close()))
-        it.grouped(RemoteProtocol.BatchSize).flatMap { chunk =>
-          val rows = chunk.map(r => argIdx.map(r.get))
-          val vals = client.callWithErrors(fname, retType, rows)
-          chunk.zip(vals).map { case (r, (v, e)) =>
-            org.apache.spark.sql.Row.fromSeq(r.toSeq :+ v :+ e)
-          }
-        }
-      }
-    }(enc)
-  }
-
-  def withJsTableColumn(df: org.apache.spark.sql.DataFrame, endpoints: Seq[(String, Int)],
-                        fname: String, argCols: Seq[String],
-                        retType: DataType): org.apache.spark.sql.DataFrame = {
-    val argIdx = argCols.map(df.schema.fieldIndex)
-    val outSchema = StructType(df.schema.fields :+ StructField("value", retType))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    val eps = endpoints.toIndexedSeq
-    fanOut(df).mapPartitions { it =>
-      if (it.isEmpty) Iterator.empty
-      else {
-        val pid = Option(org.apache.spark.TaskContext.get()).map(_.partitionId()).getOrElse(0)
-        val (host, port) = eps(pid % eps.size)
-        val client = new JsUdfClient(host, port)
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => client.close()))
-        it.grouped(RemoteProtocol.BatchSize).flatMap { chunk =>
-          val rows = chunk.map(r => argIdx.map(r.get))
-          client.callTable(fname, retType, rows).map { case (rowIdx, v) =>
-            org.apache.spark.sql.Row.fromSeq(chunk(rowIdx).toSeq :+ v)
-          }
-        }
-      }
-    }(enc)
-  }
 
   /** Register a JS guest aggregate as a session temp function. */
   def registerAggregate(spark: org.apache.spark.sql.SparkSession, name: String,

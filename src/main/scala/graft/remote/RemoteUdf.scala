@@ -1201,166 +1201,41 @@ object RemoteFixture {
 
 /** Spark-side integration: evaluate a remote function per partition. */
 object RemoteUdf {
-  /** The exchange is latency-bound (one synchronous round-trip per
-    * [[RemoteProtocol.BatchSize]] chunk), so parallelism across partitions is
-    * the throughput lever: a single-file parquet scan arrives as ONE
-    * partition and would serialize every chunk. Fan narrow inputs out to the
-    * scheduler's default parallelism before the exchange. */
-  private def fanOut(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= target) df else df.repartition(target)
-  }
-
-  /** Append `value` computed remotely from `argCols` — ONE pooled connection
-    * per partition, batched Arrow transfer, closed at task completion (the
-    * reference client embedded in a `mapPartitions`, SURVEY §2.1 #26).
-    * `endpoints` may list several equivalent servers (e.g. a pool of CPython
-    * workers); partitions round-robin across them by partition id. */
+  /** Append the remote function's result to `df` — ONE connection per
+    * partition, one [[RemoteProtocol.BatchSize]] chunk per exchange, closed
+    * at task completion (see [[PartitionDriver]]). `endpoints` may list
+    * several equivalent servers (e.g. a pool of CPython workers); partitions
+    * round-robin across them and skip dead ones. `mode` picks the output
+    * shape. With `dictEncodeStrings`, STRING argument columns travel
+    * dictionary-encoded (schema-declared encoding + DictionaryBatch per
+    * exchange, decoded server-side through the shared
+    * [[RemoteProtocol.batchCellReaders]] sites); results are identical. */
   def withRemoteColumn(df: org.apache.spark.sql.DataFrame, endpoints: Seq[(String, Int)],
-                       fname: String, argCols: Seq[String],
-                       retType: DataType): org.apache.spark.sql.DataFrame = {
-    val argTypes = argCols.map(c => df.schema(c).dataType)
-    val argIdx = argCols.map(df.schema.fieldIndex)
-    val outSchema = StructType(df.schema.fields :+ StructField("value", retType))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    val eps = endpoints.toIndexedSeq
-    fanOut(df).mapPartitions { it =>
-      if (it.isEmpty) Iterator.empty
-      else {
-        val pid = Option(org.apache.spark.TaskContext.get()).map(_.partitionId()).getOrElse(0)
-        val (host, port) = eps(pid % eps.size)
-        val client = new UdfClient(host, port)
-        // close the connection when the task finishes (success or failure)
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => client.close()))
-        // ONE wire batch per exchange — the no-deadlock invariant: the client
-        // writes the whole request before reading, so multi-batch exchanges
-        // with large rows could fill both socket directions and hang. Keep
-        // request+response bounded by a single batch.
-        it.grouped(RemoteProtocol.BatchSize).flatMap { chunk =>
-          val rows = chunk.map(r => argIdx.map(r.get))
-          val vals = client.call(fname, argTypes, rows)
-          chunk.zip(vals).map { case (r, v) =>
-            org.apache.spark.sql.Row.fromSeq(r.toSeq :+ v)
-          }
-        }
+                       fname: String, argCols: Seq[String], retType: DataType,
+                       mode: ResultMode = ResultMode.Value,
+                       dictEncodeStrings: Boolean = false): org.apache.spark.sql.DataFrame = {
+    require(!dictEncodeStrings || mode == ResultMode.Value,
+      "dictionary-encoded arguments ride the scalar value call only")
+    PartitionDriver.withColumn(df, endpoints, argCols, retType, mode,
+        RemoteProtocol.BatchSize) { (host, port, argTypes) =>
+      val client = new UdfClient(host, port)
+      new PartitionDriver.Conn {
+        def call(rows: Seq[Seq[Any]]) =
+          client.call(fname, argTypes, rows, Nil, dictEncodeStrings)
+        def callWithErrors(rows: Seq[Seq[Any]]) = client.callWithErrors(fname, argTypes, rows)
+        def callTable(rows: Seq[Seq[Any]]) = client.callTable(fname, argTypes, rows)
+        def release(dead: Boolean): Unit = client.close()
       }
-    }(enc)
-  }
-
-  def withRemoteColumn(df: org.apache.spark.sql.DataFrame, host: String, port: Int,
-                       fname: String, argCols: Seq[String],
-                       retType: DataType): org.apache.spark.sql.DataFrame =
-    withRemoteColumn(df, Seq((host, port)), fname, argCols, retType)
-
-  /** [[withRemoteColumn]] with STRING argument columns dictionary-encoded on
-    * the wire (schema-declared encoding + DictionaryBatch per exchange) —
-    * the plain-wire twin of
-    * [[graft.remote.flight.FlightUdf.withFlightColumnDict]]; results are
-    * identical to the plain path, the wire just carries indices + a
-    * dictionary the server decodes through the shared
-    * [[RemoteProtocol.batchCellReaders]] sites. */
-  def withRemoteColumnDict(df: org.apache.spark.sql.DataFrame, endpoints: Seq[(String, Int)],
-                           fname: String, argCols: Seq[String],
-                           retType: DataType): org.apache.spark.sql.DataFrame = {
-    val argTypes = argCols.map(c => df.schema(c).dataType)
-    val argIdx = argCols.map(df.schema.fieldIndex)
-    val outSchema = StructType(df.schema.fields :+ StructField("value", retType))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    val eps = endpoints.toIndexedSeq
-    fanOut(df).mapPartitions { it =>
-      if (it.isEmpty) Iterator.empty
-      else {
-        val pid = Option(org.apache.spark.TaskContext.get()).map(_.partitionId()).getOrElse(0)
-        val (host, port) = eps(pid % eps.size)
-        val client = new UdfClient(host, port)
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => client.close()))
-        it.grouped(RemoteProtocol.BatchSize).flatMap { chunk =>
-          val rows = chunk.map(r => argIdx.map(r.get))
-          val vals = client.call(fname, argTypes, rows, Nil, dictEncodeStrings = true)
-          chunk.zip(vals).map { case (r, v) =>
-            org.apache.spark.sql.Row.fromSeq(r.toSeq :+ v)
-          }
-        }
-      }
-    }(enc)
+    }
   }
 
   /** Define a guest function from source on EVERY endpoint of a worker pool
     * (each process owns its own registry, so registration must fan out) —
-    * driver-side, once, before the mapPartitions exchange runs. */
+    * driver-side, once, before the column call runs. */
   def defineRemote(endpoints: Seq[(String, Int)], sig: String, code: String,
                    handler: String = "", aggregate: Boolean = false): Unit =
     endpoints.foreach { case (h, p) =>
       val c = new UdfClient(h, p)
       try c.define(sig, code, handler, aggregate) finally c.close()
     }
-
-  /** Append `value` AND `error` columns computed remotely — the fallible
-    * call: a row whose guest evaluation throws carries (NULL, message)
-    * instead of failing the partition, mirroring the in-process
-    * `FallibleScalarInvoke` error-column surface over the wire. */
-  def withRemoteFallibleColumn(df: org.apache.spark.sql.DataFrame,
-                               endpoints: Seq[(String, Int)], fname: String,
-                               argCols: Seq[String],
-                               retType: DataType): org.apache.spark.sql.DataFrame = {
-    val argTypes = argCols.map(c => df.schema(c).dataType)
-    val argIdx = argCols.map(df.schema.fieldIndex)
-    val outSchema = StructType(df.schema.fields :+
-      StructField("value", retType) :+ StructField("error", StringType))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    val eps = endpoints.toIndexedSeq
-    fanOut(df).mapPartitions { it =>
-      if (it.isEmpty) Iterator.empty
-      else {
-        val pid = Option(org.apache.spark.TaskContext.get()).map(_.partitionId()).getOrElse(0)
-        val (host, port) = eps(pid % eps.size)
-        val client = new UdfClient(host, port)
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => client.close()))
-        it.grouped(RemoteProtocol.BatchSize).flatMap { chunk =>
-          val rows = chunk.map(r => argIdx.map(r.get))
-          val vals = client.callWithErrors(fname, argTypes, rows)
-          chunk.zip(vals).map { case (r, (v, e)) =>
-            org.apache.spark.sql.Row.fromSeq(r.toSeq :+ v :+ e)
-          }
-        }
-      }
-    }(enc)
-  }
-
-  /** Explode each input row into the remote table function's output rows —
-    * result columns are the input columns plus `value` (generator semantics
-    * over the wire, reference `call_table_function`). */
-  def withRemoteTableColumn(df: org.apache.spark.sql.DataFrame, endpoints: Seq[(String, Int)],
-                            fname: String, argCols: Seq[String],
-                            retType: DataType): org.apache.spark.sql.DataFrame = {
-    val argTypes = argCols.map(c => df.schema(c).dataType)
-    val argIdx = argCols.map(df.schema.fieldIndex)
-    val outSchema = StructType(df.schema.fields :+ StructField("value", retType))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    val eps = endpoints.toIndexedSeq
-    fanOut(df).mapPartitions { it =>
-      if (it.isEmpty) Iterator.empty
-      else {
-        val pid = Option(org.apache.spark.TaskContext.get()).map(_.partitionId()).getOrElse(0)
-        val (host, port) = eps(pid % eps.size)
-        val client = new UdfClient(host, port)
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => client.close()))
-        it.grouped(RemoteProtocol.BatchSize).flatMap { chunk =>
-          val rows = chunk.map(r => argIdx.map(r.get))
-          client.callTable(fname, argTypes, rows).map { case (rowIdx, v) =>
-            org.apache.spark.sql.Row.fromSeq(chunk(rowIdx).toSeq :+ v)
-          }
-        }
-      }
-    }(enc)
-  }
-
-  def withRemoteTableColumn(df: org.apache.spark.sql.DataFrame, host: String, port: Int,
-                            fname: String, argCols: Seq[String],
-                            retType: DataType): org.apache.spark.sql.DataFrame =
-    withRemoteTableColumn(df, Seq((host, port)), fname, argCols, retType)
 }

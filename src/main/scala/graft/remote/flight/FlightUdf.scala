@@ -1,8 +1,8 @@
 package graft.remote.flight
 
-import graft.remote.RemoteProtocol
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
+import graft.remote.{PartitionDriver, RemoteProtocol, ResultMode}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.DataType
 
 /**
  * Spark-side Arrow Flight UDF integration — the partition-leased shape of
@@ -25,11 +25,6 @@ import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType
  * windows.
  */
 object FlightUdf {
-  private def fanOut(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= target) df else df.repartition(target)
-  }
-
   /** Resolve the return type of `fname` from the server's FlightInfo —
     * discovery-driven typing, like the reference resolving `Function.returns`
     * before planning (`remote/mod.rs:79-86`). */
@@ -46,277 +41,84 @@ object FlightUdf {
     } finally c.close()
   }
 
-  /** The shared partition shape: fan narrow inputs out, one LEASED
-    * [[FlightClient]] per partition (a shared multiplexed client from
-    * [[FlightClientCache]] — concurrent partitions interleave their
-    * exchanges as h2 streams, so an executor holds a few sockets per
-    * endpoint, not one per core; released at task end, round-robin over
-    * `endpoints`), one bounded row chunk per exchange; `perChunk` maps each
-    * chunk + its extracted argument rows to output rows.
+  /** Append the Flight server's function result to `df`; `mode` picks the
+    * output shape. Each partition LEASES a shared multiplexed
+    * [[FlightClient]] from [[FlightClientCache]] (released at task end) and
+    * runs one bounded DoExchange per `batchRows` chunk
+    * ([[graft.remote.PartitionDriver]] owns fan-out, endpoint rotation,
+    * failover and chunk replay). Each client also replays an exchange on
+    * its own endpoint after a transient failure ([[FlightClient]]
+    * `maxRetries`) before the partition fails over.
     *
-    * Resilience (the [[graft.remote.UdfClient]] discipline on the Flight
-    * wire): each client replays an exchange on its own endpoint after a
-    * transient failure ([[FlightClient]] `maxRetries`); when that endpoint
-    * stays dead, the partition FAILS OVER to the next endpoint in the pool
-    * and replays the chunk there — exchanges are stateless and chunk-scoped,
-    * so a replay is idempotent and already-emitted chunks are untouched. A
-    * dead endpoint at connect time is skipped the same way. Only when every
-    * endpoint refuses does the task fail (and Spark's task retry takes
-    * over). Deadline timeouts and gRPC statuses are never failed over —
-    * those are answers, not blips. */
-  private def withPartitionClient(df: DataFrame, endpoints: Seq[(String, Int)],
-      argCols: Seq[String], extraFields: Seq[StructField],
-      batchRows: Int = RemoteProtocol.BatchSize)(
-      perChunk: (FlightClient, Seq[DataType], IndexedSeq[Row], Seq[Seq[Any]]) => Iterator[Row])
-      : DataFrame = {
-    val argTypes = argCols.map(c => df.schema(c).dataType)
-    val argIdx = argCols.map(df.schema.fieldIndex)
-    val outSchema = StructType(df.schema.fields ++ extraFields)
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    val eps = endpoints.toIndexedSeq
-    fanOut(df).mapPartitions { it =>
-      if (it.isEmpty) Iterator.empty
-      else {
-        val pid = Option(org.apache.spark.TaskContext.get()).map(_.partitionId()).getOrElse(0)
-        var epIdx = pid % eps.size
-        var lease: FlightClientCache.Lease = null
-        // lease epIdx (dials only when no shared client has stream headroom),
-        // skipping dead endpoints; a fully-dead ring is re-tried with
-        // exponential backoff (covers a restarting server's window — a
-        // single-endpoint pool mid-restart comes back within a few seconds)
-        // before the task fails and Spark-level retry takes over
-        def connect(): Unit = {
-          var pass = 0
-          var last: Throwable = null
-          while (lease == null && pass < 5) {
-            var tries = 0
-            while (lease == null && tries < eps.size) {
-              val (host, port) = eps((epIdx + tries) % eps.size)
-              try {
-                lease = FlightClientCache.acquire(host, port)
-                epIdx = (epIdx + tries) % eps.size
-              } catch {
-                case e: java.io.IOException => last = e; tries += 1
-              }
-            }
-            pass += 1
-            if (lease == null && pass < 5) Thread.sleep(250L << pass)
-          }
-          if (lease == null) throw last
-        }
-        connect()
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => if (lease != null) lease.release()))
-        it.grouped(batchRows).flatMap { chunk0 =>
-          val chunk = chunk0.toIndexedSeq
-          val rows = chunk.map(r => argIdx.map(r.get))
-          var failedOver = 0
-          var res: Iterator[Row] = null
-          while (res == null) {
-            try res = perChunk(lease.client, argTypes, chunk, rows)
-            catch {
-              case e: GrpcStatusException => throw e // server answered
-              case e: java.net.SocketTimeoutException =>
-                // deadline: the task stays aborted (containment), but the
-                // endpoint just proved itself hung — evict the shared client
-                // so the next task dials fresh instead of inheriting a
-                // connection whose server sat on a read for timeoutMs
-                lease.markDead()
-                throw e
-              case e: java.io.IOException =>
-                // this endpoint is dead past its own retries: rotate (one
-                // full ring pass, plus one — a single-endpoint pool gets a
-                // reconnect-with-backoff shot at its restarted server).
-                // markDead evicts the shared client; other holders keep it
-                // until they release (their own retries may revive it).
-                failedOver += 1
-                if (failedOver > eps.size) throw e
-                lease.markDead()
-                lease.release()
-                lease = null
-                epIdx = (epIdx + 1) % eps.size
-                connect()
-            }
-          }
-          res
-        }
-      }
-    }(enc)
-  }
-
-  /** Append `value` computed by the Flight server's scalar function.
-    * `batchRows` bounds each exchange (default [[RemoteProtocol.BatchSize]]). */
+    * `dictEncodeStrings`: STRING argument columns travel dictionary-encoded
+    * (inline DictionaryBatch per exchange) — the batch shape a
+    * dictionary-preserving producer emits at scale, where parquet string
+    * columns are dictionary pages. Results are identical; servers resolve
+    * the dictionaries (graft's backend decodes them, the reference's SDK
+    * readers resolve them in `FlightStream`).
+    *
+    * `streamed`: ONE long-lived DoExchange per partition — the reference's
+    * multi-batch streaming shape ([[FlightClient.ExchangeStream]]): every
+    * chunk ping-pongs over the same stream, so the per-exchange setup
+    * (HEADERS, descriptor, schema message, trailers) is paid once per
+    * PARTITION. Requires an incrementally-evaluating server — the reference
+    * Java/Python servers, and graft's own [[FlightServer]]. A failure closes
+    * the stream, fails over, and replays ONLY the in-flight chunk on a
+    * fresh stream. Table functions stay per-chunk BY DESIGN: a
+    * reference-shaped server may emit 0..N result batches per input batch
+    * for a table function (yield chunking, empty-yield elision — e.g.
+    * `tools/flightudf_server.py` `Table.eval_batch`), so a half-duplex
+    * ping-pong client has no framing for "this input batch's results are
+    * done" short of end-of-stream. The bounded per-chunk exchange IS that
+    * framing.
+    *
+    * `batchRows` bounds each exchange of a scalar value call or a streamed
+    * call (default [[RemoteProtocol.BatchSize]]). */
   def withFlightColumn(df: DataFrame, endpoints: Seq[(String, Int)], fname: String,
                        argCols: Seq[String], retType: DataType,
-                       batchRows: Int = RemoteProtocol.BatchSize): DataFrame =
-    withPartitionClient(df, endpoints, argCols, Seq(StructField("value", retType)),
-        batchRows) {
-      (client, argTypes, chunk, rows) =>
-        chunk.iterator.zip(client.call(fname, argTypes, rows).iterator).map {
-          case (r, v) => Row.fromSeq(r.toSeq :+ v)
-        }
-    }
-
-  def withFlightColumn(df: DataFrame, host: String, port: Int, fname: String,
-                       argCols: Seq[String], retType: DataType): DataFrame =
-    withFlightColumn(df, Seq((host, port)), fname, argCols, retType)
-
-  /** [[withFlightColumn]] with STRING argument columns dictionary-encoded on
-    * the wire (inline DictionaryBatch per exchange) — the batch shape a
-    * dictionary-preserving producer emits at scale, where parquet string
-    * columns are dictionary pages. Results are identical to the plain path;
-    * servers resolve the dictionaries (graft's backend decodes them, the
-    * reference's SDK readers resolve them in `FlightStream`). */
-  def withFlightColumnDict(df: DataFrame, endpoints: Seq[(String, Int)], fname: String,
-                           argCols: Seq[String], retType: DataType,
-                           batchRows: Int = RemoteProtocol.BatchSize): DataFrame =
-    withPartitionClient(df, endpoints, argCols, Seq(StructField("value", retType)),
-        batchRows) {
-      (client, argTypes, chunk, rows) =>
-        chunk.iterator.zip(
-          client.call(fname, argTypes, rows, Nil, dictEncodeStrings = true).iterator).map {
-          case (r, v) => Row.fromSeq(r.toSeq :+ v)
-        }
-    }
-
-  /** Explode each row into the Flight table function's yields (generator
-    * semantics over the wire, reference `call_table_function`). */
-  def withFlightTableColumn(df: DataFrame, endpoints: Seq[(String, Int)], fname: String,
-                            argCols: Seq[String], retType: DataType): DataFrame =
-    withPartitionClient(df, endpoints, argCols, Seq(StructField("value", retType))) {
-      (client, argTypes, chunk, rows) =>
-        client.callTable(fname, argTypes, rows).iterator.map {
-          case (rowIdx, v) => Row.fromSeq(chunk(rowIdx).toSeq :+ v)
-        }
-    }
-
-  def withFlightTableColumn(df: DataFrame, host: String, port: Int, fname: String,
-                            argCols: Seq[String], retType: DataType): DataFrame =
-    withFlightTableColumn(df, Seq((host, port)), fname, argCols, retType)
-
-  /** Append `value` over ONE long-lived DoExchange per partition — the
-    * reference's multi-batch streaming shape ([[FlightClient.ExchangeStream]]):
-    * every bounded chunk ping-pongs over the same stream, so the per-exchange
-    * setup (HEADERS, descriptor, schema message, trailers) is paid once per
-    * PARTITION instead of once per [[RemoteProtocol.BatchSize]] rows. Wins
-    * grow as BatchSize shrinks (more chunks per partition). Requires an
-    * incrementally-evaluating server — the reference Java/Python servers,
-    * and graft's own [[FlightServer]] (per-batch passthrough dispatch).
-    * Failure parity: a transient failure closes the stream, fails over like
-    * [[withFlightColumn]], and replays ONLY the in-flight chunk on a fresh
-    * stream (prior chunks' results are already emitted; chunks are
-    * independent, so the replay is idempotent). */
-  def withFlightColumnStreamed(df: DataFrame, endpoints: Seq[(String, Int)],
-      fname: String, argCols: Seq[String], retType: DataType,
-      batchRows: Int = RemoteProtocol.BatchSize): DataFrame =
-    withStreamedClient(df, endpoints, fname, argCols,
-      Seq(StructField("value", retType)), batchRows)(
-      (r, v) => Row.fromSeq(r.toSeq :+ v.head))
-
-  /** [[withFlightFallibleColumn]] over ONE long-lived DoExchange per
-    * partition: the fallible (value, error) column pair rides the streamed
-    * mode unchanged, because the error-column contract keeps results 1:1
-    * with input rows — each ping-ponged chunk returns exactly its row count,
-    * just with two result columns.
-    *
-    * Table functions, by contrast, stay on the per-chunk
-    * [[withFlightTableColumn]] path BY DESIGN: a reference-shaped server may
-    * emit 0..N result batches per input batch for a table function (yield
-    * chunking, empty-yield elision — e.g. `tools/flightudf_server.py`
-    * `Table.eval_batch`), so a half-duplex ping-pong client has no framing
-    * for "this input batch's results are done" short of end-of-stream. The
-    * bounded per-chunk exchange IS that framing. */
-  def withFlightFallibleColumnStreamed(df: DataFrame, endpoints: Seq[(String, Int)],
-      fname: String, argCols: Seq[String], retType: DataType,
-      batchRows: Int = RemoteProtocol.BatchSize): DataFrame =
-    withStreamedClient(df, endpoints, fname, argCols,
-      Seq(StructField("value", retType), StructField("error", StringType)), batchRows)(
-      (r, v) => Row.fromSeq(r.toSeq :+ v(0) :+ v(1)))
-
-  private def withStreamedClient(df: DataFrame, endpoints: Seq[(String, Int)],
-      fname: String, argCols: Seq[String], extraFields: Seq[StructField],
-      batchRows: Int)(rowOf: (Row, Seq[Any]) => Row): DataFrame = {
-    val argTypes = argCols.map(c => df.schema(c).dataType)
-    val argIdx = argCols.map(df.schema.fieldIndex)
-    val outSchema = StructType(df.schema.fields ++ extraFields)
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    val eps = endpoints.toIndexedSeq
-    fanOut(df).mapPartitions { it =>
-      if (it.isEmpty) Iterator.empty
-      else {
-        val pid = Option(org.apache.spark.TaskContext.get()).map(_.partitionId()).getOrElse(0)
-        var epIdx = pid % eps.size
-        var lease: FlightClientCache.Lease = null
-        var stream: FlightClient#ExchangeStream = null
-        def closeAll(markDead: Boolean): Unit = {
-          if (stream != null) { try stream.close() catch { case _: Exception => }; stream = null }
-          if (lease != null) {
-            if (markDead) lease.markDead()
-            lease.release()
-            lease = null
+                       mode: ResultMode = ResultMode.Value,
+                       dictEncodeStrings: Boolean = false, streamed: Boolean = false,
+                       batchRows: Int = RemoteProtocol.BatchSize): DataFrame = {
+    require(!(streamed && mode == ResultMode.Table),
+      "table functions run one exchange per chunk, never streamed")
+    require(!dictEncodeStrings || (mode == ResultMode.Value && !streamed),
+      "dictionary-encoded arguments ride the per-chunk scalar value call only")
+    require(batchRows == RemoteProtocol.BatchSize || mode == ResultMode.Value || streamed,
+      "batchRows bounds scalar value calls and streamed calls only")
+    PartitionDriver.withColumn(df, endpoints, argCols, retType, mode, batchRows) {
+      (host, port, argTypes) =>
+        val lease = FlightClientCache.acquire(host, port)
+        val stream =
+          if (!streamed) null
+          else try lease.client.openExchange(fname, argTypes)
+          catch {
+            case e: java.io.IOException => lease.markDead(); lease.release(); throw e
           }
-        }
-        def connect(): Unit = {
-          var pass = 0
-          var last: Throwable = null
-          while (stream == null && pass < 5) {
-            var tries = 0
-            while (stream == null && tries < eps.size) {
-              val (host, port) = eps((epIdx + tries) % eps.size)
-              try {
-                lease = FlightClientCache.acquire(host, port)
-                stream = lease.client.openExchange(fname, argTypes)
-                epIdx = (epIdx + tries) % eps.size
-              } catch {
-                case e: java.io.IOException => last = e; closeAll(markDead = true); tries += 1
-              }
-            }
-            pass += 1
-            if (stream == null && pass < 5) Thread.sleep(250L << pass)
-          }
-          if (stream == null) throw last
-        }
-        connect()
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => closeAll(markDead = false)))
-        it.grouped(batchRows).flatMap { chunk0 =>
-          val chunk = chunk0.toIndexedSeq
-          val rows = chunk.map(r => argIdx.map(r.get))
-          var failedOver = 0
-          var vals: Seq[Seq[Any]] = null
-          while (vals == null) {
-            try vals = stream.call(rows)
-            catch {
-              case e: GrpcStatusException => throw e
-              case e: java.net.SocketTimeoutException =>
-                lease.markDead() // hung endpoint: evict (see non-streamed twin)
-                throw e
-              case e: java.io.IOException =>
-                failedOver += 1
-                if (failedOver > eps.size) throw e
-                closeAll(markDead = true)
-                epIdx = (epIdx + 1) % eps.size
-                connect()
-            }
-          }
-          chunk.iterator.zip(vals.iterator).map { case (r, v) => rowOf(r, v) }
-        }
-      }
-    }(enc)
+        new LeaseConn(lease, stream, fname, argTypes, dictEncodeStrings)
+    }
   }
 
-  /** Append `value` AND `error` columns computed over the Flight wire — the
-    * fallible error-column surface served by a graft [[FlightServer]]
-    * (mirrors [[graft.remote.RemoteUdf.withRemoteFallibleColumn]]). */
-  def withFlightFallibleColumn(df: DataFrame, endpoints: Seq[(String, Int)], fname: String,
-                               argCols: Seq[String], retType: DataType): DataFrame =
-    withPartitionClient(df, endpoints, argCols,
-        Seq(StructField("value", retType), StructField("error", StringType))) {
-      (client, argTypes, chunk, rows) =>
-        chunk.iterator.zip(client.callWithErrors(fname, argTypes, rows).iterator).map {
-          case (r, (v, e)) => Row.fromSeq(r.toSeq :+ v :+ e)
-        }
+  /** A leased client: one DoExchange per chunk, or every chunk over
+    * `stream` when the partition runs streamed. */
+  private final class LeaseConn(lease: FlightClientCache.Lease,
+      stream: FlightClient#ExchangeStream, fname: String, argTypes: Seq[DataType],
+      dictEncodeStrings: Boolean) extends PartitionDriver.Conn {
+    def call(rows: Seq[Seq[Any]]): Seq[Any] =
+      if (stream != null) stream.call(rows).map(_.head)
+      else lease.client.call(fname, argTypes, rows, Nil, dictEncodeStrings)
+    def callWithErrors(rows: Seq[Seq[Any]]): Seq[(Any, String)] =
+      if (stream != null) stream.call(rows).map(v => (v(0), v(1).asInstanceOf[String]))
+      else lease.client.callWithErrors(fname, argTypes, rows)
+    def callTable(rows: Seq[Seq[Any]]): Seq[(Int, Any)] =
+      lease.client.callTable(fname, argTypes, rows)
+    /** A dead lease evicts the shared client for new acquisitions; other
+      * holders keep it until they release (their own retries may revive it). */
+    def release(dead: Boolean): Unit = {
+      if (stream != null) try stream.close() catch { case _: Exception => }
+      if (dead) lease.markDead()
+      lease.release()
     }
+  }
 }
 
 /**
@@ -328,18 +130,17 @@ object FlightUdf {
  * how stock gRPC channels behave).
  *
  * Why a CAP at all: sockets are the fleet-level resource (per-endpoint
- * socket count = executors × MaxConns), streams are free. The default sat
- * at 32 through r14 because graft's own [[FlightServer]] was
+ * socket count = executors × MaxConns), streams are free. The cap sat at
+ * 32 through r14 because graft's own [[FlightServer]] was
  * thread-per-connection — stacked streams serialized behind each other's
  * backend round-trips (measured 0.31 s → 0.54 s at 8 streams/conn). The
  * r15 server dispatches streams in parallel (per-stream workers), which
  * removed that penalty (`x_flight_throughput_5m` at exact parity, 8 conns
- * vs 32), so the default dropped to 8: every supported server type — the
+ * vs 32), so the cap dropped to 8: every supported server type — the
  * reference's grpc thread-pool servers and graft's own — now takes stacked
  * streams at full throughput, and a 1000-executor fleet holds ~8k sockets
- * per endpoint instead of ~32k. `GRAFT_FLIGHT_CONNS_PER_EP` still tunes it
- * either way; idle connections are reused across task waves, so the count
- * tracks peak CONCURRENCY, not partition count.
+ * per endpoint instead of ~32k. Idle connections are reused across task
+ * waves, so the count tracks peak CONCURRENCY, not partition count.
  *
  * Failure discipline: a partition that exhausts [[FlightClient]]'s own
  * reconnect/replay marks its lease DEAD — the client is evicted for new
@@ -349,15 +150,8 @@ object FlightUdf {
  */
 private[flight] object FlightClientCache {
   /** Connections per endpoint before leases start stacking as multiplexed
-    * streams. Default 8 (r15): graft's own [[FlightServer]] now dispatches
-    * streams in PARALLEL (per-stream workers), so stacked leases no longer
-    * serialize behind each other's backend round-trips on ANY supported
-    * server type — measured at throughput parity with the r14
-    * connection-per-task default (`x_flight_throughput_5m` min 0.498 s at 8
-    * conns vs 0.498 s at 32 on the same host). A 1000-executor fleet now
-    * holds ~8k sockets per endpoint instead of ~32k. */
-  def maxConns: Int =
-    sys.env.get("GRAFT_FLIGHT_CONNS_PER_EP").map(_.toInt).getOrElse(8)
+    * streams (why 8: see above). */
+  val MaxConns = 8
 
   private final class Entry(val client: FlightClient) {
     var leases = 0
@@ -419,7 +213,7 @@ private[flight] object FlightClientCache {
             return new Lease(idle.client, idle, key)
           case None =>
             val live = list.filter(!_.dead)
-            if (live.size + dialing(key) < maxConns) {
+            if (live.size + dialing(key) < MaxConns) {
               dialing(key) += 1
               mustDial = true
             } else if (live.nonEmpty) {

@@ -172,8 +172,8 @@ class FlightUdfSpec extends AnyFunSuite {
     got.foreach { case (x, y, v) => assert(v == gcd(x, y)) }
 
     val docs = Seq("alpha beta", "gamma", "").toDF("s")
-    val words = FlightUdf.withFlightTableColumn(docs, FlightWorker.endpoints,
-      "flight_words", Seq("s"), StringType)
+    val words = FlightUdf.withFlightColumn(docs, FlightWorker.endpoints,
+      "flight_words", Seq("s"), StringType, graft.remote.ResultMode.Table)
     assert(words.collect().map(_.getString(1)).sorted.toSeq ==
       Seq("alpha", "beta", "gamma"))
     // discovery-driven typing resolves the return type without a schema hint
@@ -205,8 +205,8 @@ class FlightUdfSpec extends AnyFunSuite {
   test("Spark integration: withFlightColumnStreamed matches the per-chunk path") {
     import spark.implicits._
     val df = (1 to 30000).map(i => (i * 21, i % 14 + 1)).toDF("x", "y")
-    val out = FlightUdf.withFlightColumnStreamed(df, FlightWorker.endpoints,
-      "flight_gcd", Seq("x", "y"), IntegerType)
+    val out = FlightUdf.withFlightColumn(df, FlightWorker.endpoints,
+      "flight_gcd", Seq("x", "y"), IntegerType, streamed = true)
     def gcd(a: Int, b: Int): Int = if (b == 0) a else gcd(b, a % b)
     val got = out.collect()
     assert(got.length == 30000)
@@ -272,8 +272,8 @@ class FlightUdfSpec extends AnyFunSuite {
     try {
       val df = (1 to 600000).map(i => (i * 37 + 1, i % 97 + 1)).toDF("x", "y")
       val fut = Future {
-        FlightUdf.withFlightColumnStreamed(df, Seq(("127.0.0.1", port)),
-          "flight_gcd", Seq("x", "y"), IntegerType).collect()
+        FlightUdf.withFlightColumn(df, Seq(("127.0.0.1", port)),
+          "flight_gcd", Seq("x", "y"), IntegerType, streamed = true).collect()
       }
       Thread.sleep(500)
       assert(!fut.isCompleted, "query finished before the kill — grow the input")

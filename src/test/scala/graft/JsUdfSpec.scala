@@ -1,6 +1,6 @@
 package graft
 
-import graft.remote.{JsUdf, JsUdfClient, JsWorker}
+import graft.remote.{JsUdf, JsUdfClient, JsWorker, ResultMode}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -113,14 +113,19 @@ class JsUdfSpec extends AnyFunSuite {
     import spark.implicits._
     val df = (1 to 500).map(i => (i, i * 6, i * 4)).toDF("id", "a", "b")
       .repartition(4)
-    val out = JsUdf.withJsColumn(df, JsWorker.endpoints, "gcd",
-      Seq("a", "b"), IntegerType)
-    val rows = out.select("id", "value").as[(Int, Int)].collect().toMap
-    assert(rows.size == 500)
-    assert((1 to 500).forall(i => rows(i) == 2 * i))
+    val dead = {
+      val s = new java.net.ServerSocket(0) // nothing listening once closed
+      try ("127.0.0.1", s.getLocalPort) finally s.close()
+    }
+    for (eps <- Seq(JsWorker.endpoints, dead +: JsWorker.endpoints)) {
+      val out = JsUdf.withJsColumn(df, eps, "gcd", Seq("a", "b"), IntegerType)
+      val rows = out.select("id", "value").as[(Int, Int)].collect().toMap
+      assert(rows.size == 500)
+      assert((1 to 500).forall(i => rows(i) == 2 * i))
+    }
     val small = Seq(3, 1, 4).toDF("id")
-    val tbl = JsUdf.withJsTableColumn(small, JsWorker.endpoints,
-      "js_series", Seq("id"), IntegerType)
+    val tbl = JsUdf.withJsColumn(small, JsWorker.endpoints,
+      "js_series", Seq("id"), IntegerType, ResultMode.Table)
     assert(tbl.count() == 8)
   }
 

@@ -1,6 +1,7 @@
 package graft
 
-import graft.remote.{RemoteUdf, UdfClient, UdfServer}
+import graft.remote.{JsUdf, RemoteUdf, ResultMode, UdfClient, UdfServer}
+import graft.remote.flight.FlightUdf
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -392,8 +393,8 @@ class RemoteUdfSpec extends AnyFunSuite {
     val server = new UdfServer()
     try {
       val df = spark.range(4).selectExpr("CAST(id AS INT) AS n")
-      val out = RemoteUdf.withRemoteTableColumn(df, "127.0.0.1", server.boundPort,
-        "range_setof", Seq("n"), IntegerType)
+      val out = RemoteUdf.withRemoteColumn(df, Seq(("127.0.0.1", server.boundPort)),
+        "range_setof", Seq("n"), IntegerType, ResultMode.Table)
       val rows = out.collect().map(r => (r.getInt(0), r.getInt(1))).sorted.toSeq
       assert(rows == Seq((1, 0), (2, 0), (2, 1), (3, 0), (3, 1), (3, 2)))
     } finally server.close()
@@ -402,17 +403,35 @@ class RemoteUdfSpec extends AnyFunSuite {
   test("mapPartitions integration computes remote column") {
     Graft.install(spark)
     val server = new UdfServer()
+    val dead = ("127.0.0.1", freePort()) // nothing listening: skipped at connect time
     try {
       val df = spark.range(100).selectExpr("CAST(id AS INT) AS a", "CAST(id % 7 AS INT) AS b")
-      val out = RemoteUdf.withRemoteColumn(df, "127.0.0.1", server.boundPort,
-        "add", Seq("a", "b"), IntegerType)
-      val rows = out.collect()
-      assert(rows.length == 100)
-      val byId = rows.map(r => r.getInt(0) -> r.getInt(2)).toMap
-      assert(byId(14) == 14) // 14 + 0
-      assert(byId(12) == 17) // 12 + 5
-      assert(byId(30) == 32) // 30 + 2
+      val live = Seq(("127.0.0.1", server.boundPort))
+      for (eps <- Seq(live, dead +: live)) {
+        val out = RemoteUdf.withRemoteColumn(df, eps, "add", Seq("a", "b"), IntegerType)
+        val rows = out.collect()
+        assert(rows.length == 100)
+        val byId = rows.map(r => r.getInt(0) -> r.getInt(2)).toMap
+        assert(byId(14) == 14) // 14 + 0
+        assert(byId(12) == 17) // 12 + 5
+        assert(byId(30) == 32) // 30 + 2
+      }
     } finally server.close()
+  }
+
+  test("every wire's column call rejects an empty endpoint list on the driver") {
+    val df = spark.range(4).selectExpr("CAST(id AS INT) AS a")
+    intercept[IllegalArgumentException](
+      RemoteUdf.withRemoteColumn(df, Nil, "add", Seq("a", "a"), IntegerType))
+    intercept[IllegalArgumentException](
+      JsUdf.withJsColumn(df, Nil, "gcd", Seq("a", "a"), IntegerType))
+    intercept[IllegalArgumentException](
+      FlightUdf.withFlightColumn(df, Nil, "gcd", Seq("a", "a"), IntegerType))
+  }
+
+  private def freePort(): Int = {
+    val s = new java.net.ServerSocket(0)
+    try s.getLocalPort finally s.close()
   }
 
   test("golden framing: the exact wire bytes a Flight bridge must speak") {
