@@ -294,6 +294,26 @@ object Bench {
           s"pack/shuffle must keep the mixed set 1:1, got $nMix -> $nOut")
   }
 
+  /** A previous capture's per-query seconds, if a run on `cpus` cores may be
+    * compared with it. Never compare across core counts: an 8-core run diffed
+    * against a 32-core capture prints a bogus ~0.3-0.5 "regression". A
+    * capture with no "cpus" field is not compared at all (`cpusMissing`):
+    * its core count is unknown. */
+  private[graft] final case class PrevCapture(queries: Option[Map[String, Double]],
+                                              cpusMissing: Boolean)
+
+  private[graft] def prevCapture(prevTxt: String, cpus: Int): PrevCapture = {
+    val prevCpus = """"cpus":(\d+)""".r.findFirstMatchIn(prevTxt).map(_.group(1).toInt)
+    // the "queries" object of our own one-line format
+    val qStart = prevTxt.indexOf("\"queries\":{")
+    val queries = if (qStart < 0 || !prevCpus.contains(cpus)) None else {
+      val body = prevTxt.substring(qStart + 11, prevTxt.indexOf('}', qStart))
+      val pair = """"([^"]+)":(-?[0-9.]+)""".r
+      Some(pair.findAllMatchIn(body).map(m => m.group(1) -> m.group(2).toDouble).toMap)
+    }
+    PrevCapture(queries, cpusMissing = prevCpus.isEmpty)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -2052,23 +2072,12 @@ object Bench {
     val famSecJson = famSec
       .map { case (f, s) => s""""$f":${f"$s%.2f"}""" }.mkString("{", ",", "}")
     val prevPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_PREV", "BENCHFULL_prev.json")
-    val (geoStr, nCommon, nImp, nReg, famGeoJson) = try {
-      val prevTxt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(prevPath)))
-      // extract the "queries" object of our own one-line format
-      // Never compare across CPU counts: the driver benches at 32 AND 8
-      // cores, and an 8-core run diffed against a 32-core prev would print
-      // a bogus ~0.3-0.5 "regression" in exactly the stdout tail the
-      // driver keeps. Prev captures written before the "cpus" field existed
-      // are all 32-core artifacts.
-      val prevCpus = """"cpus":(\d+)""".r.findFirstMatchIn(prevTxt)
-        .map(_.group(1).toInt).getOrElse(32)
-      val qStart = prevTxt.indexOf("\"queries\":{")
-      if (qStart < 0 || prevCpus != cpusNum) ("null", 0, 0, 0, "null") else {
-        val body = prevTxt.substring(qStart + 11, prevTxt.indexOf('}', qStart))
-        val pair = """"([^"]+)":(-?[0-9.]+)""".r
-        val prevMap = pair.findAllMatchIn(body)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
+    val prev = try prevCapture(new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(prevPath))), cpusNum)
+    catch { case _: Throwable => PrevCapture(None, cpusMissing = false) }
+    val (geoStr, nCommon, nImp, nReg, famGeoJson) = prev.queries match {
+      case None => ("null", 0, 0, 0, "null")
+      case Some(prevMap) =>
         val speedups = results.collect {
           case (k, v, _) if v > 0 && prevMap.getOrElse(k, -1.0) > 0 =>
             k -> prevMap(k) / v // speedup: >1 = faster now
@@ -2089,10 +2098,9 @@ object Bench {
           (f"$geo%.4f", common.size,
             common.count(_ > 1.10), common.count(_ < 0.90), famGeo)
         }
-      }
-    } catch { case _: Throwable => ("null", 0, 0, 0, "null") }
+    }
     val summaryLine =
-      s"""{"metric":"total","value":$totalStr,"unit":"sec","n":${results.size},"n_failed":$nFailed,"failed":${results.filter(_._2 < 0).map("\"" + _._1 + "\"").mkString("[", ",", "]")},"cpus":$cpusNum,"ncpus":$ncpus,"load_gate":"$loadGate","budget_hit":$budgetHit,"rep_floor_met":$repFloorMet,"session_overhead":${f"$overheadSec%.3f"},"geomean_speedup_vs_prev":$geoStr,"n_common":$nCommon,"n_improved_10pct":$nImp,"n_regressed_10pct":$nReg,"family_sec":$famSecJson,"family_geomean_vs_prev":$famGeoJson,"prev_file":"$prevPath","benchfull":"$fullPath","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$totalStr,"unit":"sec","n":${results.size},"n_failed":$nFailed,"failed":${results.filter(_._2 < 0).map("\"" + _._1 + "\"").mkString("[", ",", "]")},"cpus":$cpusNum,"ncpus":$ncpus,"load_gate":"$loadGate","budget_hit":$budgetHit,"rep_floor_met":$repFloorMet,"session_overhead":${f"$overheadSec%.3f"},"geomean_speedup_vs_prev":$geoStr,"n_common":$nCommon,"n_improved_10pct":$nImp,"n_regressed_10pct":$nReg,"family_sec":$famSecJson,"family_geomean_vs_prev":$famGeoJson,"prev_cpus_assumed":${prev.cpusMissing},"prev_file":"$prevPath","benchfull":"$fullPath","sf":"$sfDir"}"""
     println(summaryLine)
     spark.stop()
   }

@@ -236,6 +236,29 @@ object Dedup {
     (docs, cand, banded)
   }
 
+  /** How the large-scale near-dedup verify joins attach candidate texts. */
+  private[graft] sealed trait VerifyJoin
+  private[graft] object VerifyJoin {
+    case object Broadcast extends VerifyJoin
+    case object ShuffleHash extends VerifyJoin
+    /** no hint: the planner's own choice, which can spill */
+    case object Planner extends VerifyJoin
+  }
+
+  /** Broadcast when the texts fit `bcMax` and the candidate side dwarfs
+    * them (the cost model in [[nearDedupCorpus]]). Otherwise shuffle-hash,
+    * but only while one shuffle partition's share of the texts stays within
+    * the same `bcMax` budget: a shuffle-hash build side cannot spill, so
+    * above it the join is left to the planner (sort-merge spills). */
+  private[graft] def verifyJoin(nCand: Long, nTxt: Long, txtBytes: Long, bcMax: Long,
+                                shufflePartitions: Int): VerifyJoin = {
+    val avgLen = if (nTxt == 0) 0L else txtBytes / nTxt
+    if (txtBytes + 64L * nTxt <= bcMax && nCand * (48L + avgLen) > 4L * txtBytes)
+      VerifyJoin.Broadcast
+    else if (txtBytes / math.max(shufflePartitions, 1) <= bcMax) VerifyJoin.ShuffleHash
+    else VerifyJoin.Planner
+  }
+
   /** True-Jaccard verification of candidate pairs: texts rejoin exactly
     * once, only for candidate ids (a tiny fraction of the corpus); the _nd
     * variant stops the threshold filter being pushed into the join and the
@@ -372,12 +395,12 @@ object Dedup {
       if (stageTimes) markStage("nearDedup.bloom", tbl)
       val bcMax = df.sparkSession.conf
         .get("spark.graft.nearDedup.broadcastTextBytes", "268435456").toLong
-      val avgLen = if (nTxt == 0) 0L else txtBytes / nTxt
-      val useBc = txtBytes + 64L * nTxt <= bcMax &&
-        nCand * (48L + avgLen) > 4L * txtBytes
-      val docsSide = if (useBc) broadcast(texts) else texts
+      val join = verifyJoin(nCand, nTxt, txtBytes, bcMax,
+        spark.sessionState.conf.numShufflePartitions)
+      val docsSide = if (join == VerifyJoin.Broadcast) broadcast(texts) else texts
       val tv = System.nanoTime()
-      val v = verifyPairs(cand, docsSide, threshold, shuffleHash = !useBc)
+      val v = verifyPairs(cand, docsSide, threshold,
+        shuffleHash = join == VerifyJoin.ShuffleHash)
         .select(col("id_a"), col("id_b"))
         .localCheckpoint()
       if (stageTimes) markStage("nearDedup.verify", tv)

@@ -97,6 +97,18 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
+  test("nearDedupCorpus verify join: shuffle-hash only while a partition's texts fit the budget") {
+    import Dedup.VerifyJoin._
+    val (bcMax, parts) = (1000L, 4)
+    // few candidates: never worth a broadcast
+    assert(Dedup.verifyJoin(nCand = 1, nTxt = 1, txtBytes = 100, bcMax, parts) == ShuffleHash)
+    assert(Dedup.verifyJoin(nCand = 1000, nTxt = 1, txtBytes = 100, bcMax, parts) == Broadcast)
+    // the boundary: txtBytes / partitions == bcMax, then one byte more per partition
+    assert(Dedup.verifyJoin(1, 1, parts * bcMax, bcMax, parts) == ShuffleHash)
+    assert(Dedup.verifyJoin(1, 1, parts * (bcMax + 1), bcMax, parts) == Planner)
+    assert(Dedup.verifyJoin(1, 1, 2 * parts * bcMax, bcMax, 2 * parts) == ShuffleHash)
+  }
+
   test("semanticDedup: planted copies resolve greedily to the smallest id") {
     Graft.install(spark)
     import org.apache.spark.sql.types._
